@@ -27,38 +27,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // rank-filter group limits must cover t59's VerifyCap=4096
-      // sample (default threshold 1000 silently disables the pushdown)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ContextCleaner frees broadcast/shuffle blocks only when the driver
-      // GCs; the default periodic-GC interval (30min) outlives the whole
-      // suite, and in local mode driver + executor share one heap — stale
-      // broadcast blocks from 115 warmup runs squeeze the storage pool
-      // that cache-reliant queries (e06's Lloyd intermediates) depend on
-      // (measured: e06 16.7 s inside the full suite vs 1.9 s isolated).
-      // A real cluster self-heals (per-executor heaps, natural driver GC);
-      // local[32] needs the nudge.
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      // The similarity/PQ index store (ext/Artifacts.scala) is DURABLE
-      // across JVMs by design (the round-15 store-resident index work).
-      // The bench must not inherit artifacts committed by a previous
-      // invocation — every bench run computes from the parquet inputs,
-      // so each invocation gets a fresh, private artifact root. Within
-      // the run the warm store still means passes 2..n bill probe-only
-      // cost, the same billing the round-14 per-JVM memo produced.
-      .config("spark.graft.indexDir",
-        java.nio.file.Files.createTempDirectory("graft_bench_idx").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.defaultCores
+    val spark = Session.local(cpus)
     // Optional comma-separated filter for profiling single queries.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val queries = SparkEntry.queries.filter {
@@ -79,7 +49,7 @@ object Bench {
     // loaded host still shows through (every run competes for the cores).
     def yardstickOnce(): Double = {
       val t0 = System.nanoTime()
-      exec(spark.range(0, 256000000L, 1, cpus.toInt)
+      exec(spark.range(0, 256000000L, 1, cpus)
         .selectExpr("xxhash64(id) AS h").selectExpr("bit_xor(h) AS s"))
       (System.nanoTime() - t0) / 1e9
     }

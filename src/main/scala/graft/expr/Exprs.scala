@@ -71,6 +71,25 @@ object Exprs {
   def lavg(c: Column, scale: Int = 4): Column =
     lsum(c, scale) / count(c)
 
+  /** Z-address (Morton interleave) of the low `bits` bits of each key, as
+    * a long: bit i of key j lands at i·n + (n-1-j), so key 0 takes the
+    * most significant bit of each n-bit group. The space-filling curve
+    * behind multi-dimensional clustering (Delta/Iceberg OPTIMIZE ZORDER):
+    * sorting by it makes every size-2^k-aligned box of key space a
+    * CONTIGUOUS z range, so a file holding a z slab has tight min/max
+    * statistics on every key at once. Pure shift/and/or Column
+    * arithmetic: whole-stage-codegen'd, no UDF. */
+  def zAddress(keys: Seq[Column], bits: Int): Column = {
+    val n = keys.length
+    require(n >= 1 && bits >= 1 && n * bits <= 63,
+      s"zAddress: $n keys × $bits bits must fit in 63")
+    (for {
+      i <- 0 until bits
+      (k, j) <- keys.zipWithIndex
+    } yield shiftleft(shiftright(k.cast("long"), i).bitwiseAND(lit(1L)),
+      i * n + (n - 1 - j))).reduce(_ bitwiseOR _)
+  }
+
   // --- Reference scalar expressions (file:line cites → /root/reference) ---
 
   /** E2: last-N-characters slice (`main.py:95`, `main.py:102`). */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.expr.Exprs._
@@ -142,20 +142,6 @@ object Bucketed {
 
   // --- q53: z-order layout, multi-dimensional row-group skipping --------
 
-  /** 16-bit Morton interleave of two long columns' low 16 bits — the
-    * space-filling curve behind multi-dimensional clustering (Delta/
-    * Iceberg OPTIMIZE ZORDER). Sorting by z makes every size-2^k-aligned
-    * square of (x, y) space a CONTIGUOUS z range, so a file holding a z
-    * slab has tight min/max statistics on BOTH columns at once — a
-    * single-column sort can only ever serve one predicate dimension.
-    * Pure shift/and/or Column arithmetic: whole-stage-codegen'd, no UDF. */
-  private[graft] def morton16(x: Column, y: Column): Column =
-    (0 until 16).map { i =>
-      shiftleft(shiftright(x, i).bitwiseAND(lit(1L)), 2 * i)
-        .bitwiseOR(
-          shiftleft(shiftright(y, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }.reduce(_ bitwiseOR _)
-
   /** Events rewritten z-ordered on (user_id, hour) — range-partitioned
     * and sorted by the Morton value, then the curve column dropped: the
     * layout IS the index. Memoized per source dir (pay-at-ingest, the
@@ -168,9 +154,9 @@ object Bucketed {
       val path = scratchPath("zorder", "events_zorder", dir)
       if (dir != written.get("events_zorder")) {
         events(s, dir)
-          .withColumn("z", morton16(
-            col("user_id").bitwiseAND(lit(0xFFFFL)),
-            expr("ts div 3600000000000").bitwiseAND(lit(0xFFFFL))))
+          .withColumn("z", zAddress(Seq(
+            expr("ts div 3600000000000").bitwiseAND(lit(0xFFFFL)),
+            col("user_id").bitwiseAND(lit(0xFFFFL))), 16))
           .repartitionByRange(32, col("z"))
           .sortWithinPartitions(col("z"))
           .drop("z")

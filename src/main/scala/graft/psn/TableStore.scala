@@ -2551,10 +2551,10 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       txnTag: Option[String] = None): Boolean = {
     require(columns.length >= 2,
       s"ZORDER needs at least 2 columns (single-column layout is cluster)")
-    import org.apache.spark.sql.functions.{datediff, lit, shiftleft,
-      shiftright, when}
+    import org.apache.spark.sql.functions.{datediff, lit, when}
     import org.apache.spark.sql.types.{DateType, NumericType, TimestampNTZType,
       TimestampType}
+    import graft.expr.Exprs.zAddress
     val base = resolve(table)
     val (seq0, v0) = head(table)
     val df = readSnapshot(table, v0, base)
@@ -2604,12 +2604,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
           bs.map(b => when(k >= b, lit(1)).otherwise(lit(0)))
             .reduce(_ + _))
       }
-      val n = columns.length
-      val z = (for {
-        i <- 0 until bits
-        (b, j) <- buckets.zipWithIndex
-      } yield shiftleft(shiftright(b, i).bitwiseAND(lit(1)),
-        i * n + (n - 1 - j))).reduce(_ + _) // disjoint bits: + is OR
+      val z = zAddress(buckets, bits)
       val (v, claimed) = claimNext(table)
       keyed.withColumn("__z", z)
         .repartitionByRange(partitions, col("__z"))

@@ -417,23 +417,24 @@ object Streams {
       .sortedSmall("user_id")
   }
 
+  /** Shuffle partitions of every stateful stream. Stateful operators
+    * allocate ONE state store per shuffle partition per operator and
+    * commit every one of them each micro-batch — at the gate corpus (1e5
+    * rows, 4–8 batches) the default 32 partitions spend more wall time on
+    * empty state-store commits than on data (measured: s22 19.4 s → state
+    * bookkeeping, not the join). 8 is sized to the gate (4 measured the
+    * same wall time at sf0.1); production sizes this to the cluster.
+    * Spark pins the state partitioning in the checkpoint at first start,
+    * so it is set per query rather than on the session. */
+  private val StatePartitions = 8
+
   /** Run `body` (a streaming query start + await) with
-    * `spark.sql.shuffle.partitions` pinned to `n`, restoring the session
-    * value after. Stateful operators allocate ONE state store per
-    * shuffle partition per operator and commit every one of them each
-    * micro-batch — at the gate corpus (1e5 rows, 4–8 batches) the
-    * default 32 partitions spend more wall time on empty state-store
-    * commits than on data (measured: s22 19.4 s → state bookkeeping, not
-    * the join). 8 partitions is sized to the gate; production sizes this
-    * to the cluster — the knob is per-query because Spark pins the state
-    * partitioning in the checkpoint at first start. Queries run
-    * sequentially through one session, so the set/restore cannot race;
-    * results are partition-count independent (everything downstream is
-    * re-aggregated or re-sorted). */
-  private def withStatePartitions[T](s: SparkSession, n0: Int)(
-      body: => T): T = {
-    val n = sys.env.get("SPARK_GRAFT_STATE_PARTS")
-      .map(_.toInt).getOrElse(n0)
+    * `spark.sql.shuffle.partitions` pinned to [[StatePartitions]],
+    * restoring the session value after. Queries run sequentially through
+    * one session, so the set/restore cannot race; results are
+    * partition-count independent (everything downstream is re-aggregated
+    * or re-sorted). */
+  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     // AQE off for the whole micro-batch loop: the engine disables it for
     // the stateful plan anyway, but foreachBatch BODIES still pick it up
@@ -444,7 +445,7 @@ object Streams {
     val aqeKey = "spark.sql.adaptive.enabled"
     val old = s.conf.get(key)
     val oldAqe = s.conf.get(aqeKey)
-    s.conf.set(key, n.toString)
+    s.conf.set(key, StatePartitions.toString)
     s.conf.set(aqeKey, "false")
     try body finally {
       s.conf.set(key, old); s.conf.set(aqeKey, oldAqe)
@@ -492,7 +493,7 @@ object Streams {
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = stream.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .trigger(Trigger.AvailableNow())
@@ -558,7 +559,7 @@ object Streams {
       .parquet(srcDir)
       .withWatermark("event_ts", s"${span + 3600} seconds")
       .dropDuplicatesWithinWatermark("event_id")
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = stream.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .trigger(Trigger.AvailableNow())
@@ -612,7 +613,7 @@ object Streams {
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(store.feedPath("ev_log"))
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = stream.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .trigger(Trigger.AvailableNow())
@@ -673,7 +674,7 @@ object Streams {
       .select(unix_timestamp(col("window.start")).as("bucket_start"),
         col("event_type"), col("n_events"),
         col("total_value").cast("double").as("total_value"))
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = agg.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .trigger(Trigger.AvailableNow())
@@ -764,7 +765,7 @@ object Streams {
         "click_ts BETWEEN purch_ts - INTERVAL 1 HOUR AND purch_ts"))
       .select(col("c_user").as("user_id"), col("value"))
     val outDir = base.resolve("out").toString
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = pairs.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .trigger(Trigger.AvailableNow())
@@ -842,7 +843,7 @@ object Streams {
         (unix_timestamp(col("session_window.end")) - 1800)
           .as("session_last"),
         col("n_events"))
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = agg.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .trigger(Trigger.AvailableNow())
@@ -1003,7 +1004,7 @@ object Streams {
     }
     val stream = s.readStream.schema(incDocs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = stream.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .trigger(Trigger.AvailableNow())
@@ -1165,7 +1166,7 @@ object Streams {
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(store.feedPath("ev_log"))
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = stream.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .foreachBatch { (_: DataFrame, _: Long) =>
@@ -1270,7 +1271,7 @@ object Streams {
         "click_ts BETWEEN purch_ts - INTERVAL 1 HOUR AND purch_ts"))
       .select(col("c_user").as("user_id"), col("value"))
     val outDir = base.resolve("out").toString
-    withStatePartitions(s, 8) {
+    withStatePartitions(s) {
       val q = pairs.writeStream
         .option("checkpointLocation", base.resolve("ckpt").toString)
         .trigger(Trigger.AvailableNow())

@@ -52,6 +52,7 @@ class PqArtifactSpec extends AnyFunSuite {
     import graft.ext.Artifacts
     val root = java.nio.file.Files
       .createTempDirectory("graft_idx_root").toString
+    val prevRoot = spark.conf.get("spark.graft.indexDir")
     spark.conf.set("spark.graft.indexDir", root)
     Artifacts.dropMemoForTest()
     SimilarityOps.dropModelMemoForTest()
@@ -72,7 +73,7 @@ class PqArtifactSpec extends AnyFunSuite {
       assert(r1.map(_.toString).sorted.sameElements(
         r2.map(_.toString).sorted), "store-served probe diverged")
     } finally {
-      spark.conf.unset("spark.graft.indexDir")
+      spark.conf.set("spark.graft.indexDir", prevRoot)
       Artifacts.dropMemoForTest()
       SimilarityOps.dropModelMemoForTest()
     }
@@ -84,6 +85,7 @@ class PqArtifactSpec extends AnyFunSuite {
       .createTempDirectory("graft_art_corpus").toString
     val root = java.nio.file.Files
       .createTempDirectory("graft_idx_root2").toString
+    val prevRoot = spark.conf.get("spark.graft.indexDir")
     spark.conf.set("spark.graft.indexDir", root)
     try {
       spark.range(5).toDF("id").write.mode("overwrite")
@@ -109,7 +111,7 @@ class PqArtifactSpec extends AnyFunSuite {
         .collect().head.getLong(0) == 8L)
       assert(Artifacts.buildCount.get() == b0 + 2)
     } finally {
-      spark.conf.unset("spark.graft.indexDir")
+      spark.conf.set("spark.graft.indexDir", prevRoot)
       Artifacts.dropMemoForTest()
     }
   }

@@ -4,31 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // rank-filter group limits must cover t59's VerifyCap=4096
-      // sample (default threshold 1000 silently disables the pushdown)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The sandbox host sometimes stalls the whole JVM for minutes
-      // (oversubscription). With the default 120 s network timeout the
-      // driver expires its own local block manager during such a stall;
-      // re-registration then dies forever in local mode (the re-register
-      // path resolves a CoarseGrainedScheduler endpoint that never exists
-      // under local[n]), heartbeats fail 60x and the executor exits,
-      // cascade-failing every later test in the fork (seen 2026-08-18).
-      // 600 s rides out the stall; it has no effect on healthy runs.
-      .config("spark.network.timeout", "600s")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
   val sf: String = "/root/testdata/sf0.001"
 }
 

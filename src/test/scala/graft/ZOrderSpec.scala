@@ -4,11 +4,15 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q53's reason to exist, measured: a 2-d box query over a z-ordered
+import graft.expr.Exprs.zAddress
+import graft.psn.{FileStats, TableStore}
+
+/** The Z-order layouts and their one kernel, [[graft.expr.Exprs.zAddress]].
+  *
+  * q53's reason to exist, measured: a 2-d box query over a z-ordered
   * layout reads a fraction of the rows the same query reads over a
   * single-column (time-sorted) layout, because the Morton sort gives
   * every file tight min/max statistics on BOTH dimensions and parquet
@@ -16,9 +20,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * (q53's DuckDB oracle) proves the ANSWER is layout-independent; this
   * spec proves the layout does what it claims on a corpus big enough for
   * the statistics to bite.
+  *
+  * TableStore.clusterZ, the multi-dimensional store layout: content is
+  * identical across the rewrite, file-level pruning engages on BOTH
+  * participating columns (where the single-column cluster provably prunes
+  * only its own), and unsupported shapes are refused loudly.
   */
 class ZOrderSpec extends AnyFunSuite {
   import TestSpark._
+  import spark.implicits._
 
   /** Rows the parquet reader actually produced (post row-group skip).
     * Runs with AQE off so the scan node is reachable in the executed
@@ -60,7 +70,7 @@ class ZOrderSpec extends AnyFunSuite {
     // a production-sized file for free; each z file covers a ~64×64
     // (user, hour) tile, each time-sorted file a ~4-hour stripe.
     base
-      .withColumn("z", graft.ops.Bucketed.morton16(col("user"), col("hour")))
+      .withColumn("z", zAddress(Seq(col("hour"), col("user")), 16))
       .repartitionByRange(256, col("z")).sortWithinPartitions(col("z"))
       .drop("z")
       .write.mode("overwrite").parquet(zDir)
@@ -89,5 +99,73 @@ class ZOrderSpec extends AnyFunSuite {
     assert(zRead * 3 < tRead,
       s"z-order read $zRead rows, time-sorted read $tRead")
     assert(tRead < 200000L, "time-sorted layout should itself prune")
+  }
+
+  // b is a deterministic permutation of a: uncorrelated dimensions, so a
+  // range layout on `a` gives every file near-full-range `b` stats.
+  private def frame() = (1 to 4096)
+    .map(i => (i.toLong, ((i * 2654435761L) % 4096 + 1)))
+    .toDF("a", "b")
+
+  private def kept(store: TableStore, t: String, c: String): Int =
+    store.pruneInfo(t, Seq(FileStats.le(c, FileStats.LLong(512L))))._1
+
+  test("zorder prunes on both dimensions; cluster only on its own") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_z").toString
+    val store = new TableStore(spark, wh)
+    store.overwrite("t", frame())
+    val before = store.read("t").as[(Long, Long)].collect().toSet
+
+    assert(store.cluster("t", "a", 8))
+    val total = store.fileCount("t")
+    assert(kept(store, "t", "a") < total, "cluster must prune its column")
+    assert(kept(store, "t", "b") == total,
+      "uncorrelated second column should NOT prune under single-col cluster")
+
+    assert(store.clusterZ("t", Seq("a", "b"), 16))
+    val totalZ = store.fileCount("t")
+    assert(kept(store, "t", "a") < totalZ, "zorder must prune dim 1")
+    assert(kept(store, "t", "b") < totalZ, "zorder must prune dim 2")
+    assert(store.read("t").as[(Long, Long)].collect().toSet == before,
+      "zorder is a layout change — content must be identical")
+  }
+
+  test("nulls survive the layout (bucket 0) and unsupported shapes are loud") {
+    val withNulls = frame().union(
+      Seq((0L, 7L)).toDF("a", "b")
+        .select(lit(null).cast("bigint").as("a"), col("b")))
+    val wh = java.nio.file.Files.createTempDirectory("graft_z2").toString
+    val store = new TableStore(spark, wh)
+    store.overwrite("n", withNulls)
+    assert(store.clusterZ("n", Seq("a", "b"), 4))
+    assert(store.read("n").filter("a IS NULL").count() == 1)
+    assert(store.read("n").count() == 4097)
+
+    store.overwrite("s", Seq((1L, "x"), (2L, "y")).toDF("k", "v"))
+    assert(intercept[IllegalArgumentException] {
+      store.clusterZ("s", Seq("k", "v"), 2)
+    }.getMessage.contains("ZORDER"))
+    assert(intercept[IllegalArgumentException] {
+      store.clusterZ("s", Seq("k"), 2)
+    }.getMessage.contains("at least 2"))
+  }
+
+  test("zAddress matches a scalar bit-interleave loop for 2 and 3 keys") {
+    val rnd = new scala.util.Random(42)
+    // key j's bit i lands at i*n + (n-1-j): key 0 leads each group
+    def reference(keys: Seq[Long], bits: Int): Long = {
+      val n = keys.length
+      var z = 0L
+      for (i <- 0 until bits; j <- 0 until n)
+        z |= ((keys(j) >>> i) & 1L) << (i * n + (n - 1 - j))
+      z
+    }
+    for ((n, bits) <- Seq(2 -> 16, 3 -> 21)) {
+      val keys = Seq.fill(500)(Seq.fill(n)(rnd.nextLong() & ((1L << bits) - 1)))
+      val cols = (0 until n).map(j => col("k")(j))
+      val got = keys.toDF("k").select(zAddress(cols, bits))
+        .collect().map(_.getLong(0)).toSeq
+      assert(got == keys.map(reference(_, bits)), s"n=$n bits=$bits")
+    }
   }
 }

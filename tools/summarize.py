@@ -1,20 +1,20 @@
 #!/usr/bin/env python3
-"""Round-16 final-measurement summary over the closeout chain's artifacts.
+"""Final-measurement summary over the close-out chain's artifacts.
 
 Reads the paired per-query medians (BENCH_LAST.json = Spark 1x,
 BENCH_REF.json = DuckDB 1x), BENCH_10X.json and BENCH_100X.json, and
-prints the tables OPTIMIZATION_r16.md quotes.
+prints the tables an OPTIMIZATION_r<N>.md quotes: suite totals, the
+comparable-work split, per-family totals, the worst paired ratios, and
+growth outliers.
 
-Fixes over summarize_r15.py (ADVICE r15):
   - spark-side errors (BENCH_LAST "errors" list) are excluded from the
     common set, and duck legs of exactly 0 are guarded;
-  - the comparable-work split the docs pivot on (duck >= 0.1 s) is
-    computed explicitly — count + ratio for BOTH sets — and the
-    worst-ratio/above-2x listings are restricted to the comparable set
-    (the final-state oracles' ratios measure declared semantics, not
-    plan quality).
+  - the comparable-work split (duck >= 0.1 s) is computed explicitly —
+    count + ratio for BOTH sets — and the worst-ratio/above-2x listings
+    are restricted to the comparable set (the final-state oracles'
+    ratios measure declared semantics, not plan quality).
 
-Usage: tools/summarize_r16.py [repo_dir]
+Usage: tools/summarize.py [repo_dir]
 """
 import json
 import os
